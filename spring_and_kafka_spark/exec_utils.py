@@ -13,9 +13,15 @@ subplans). It picks the mechanism by deployment:
 - cluster without a checkpoint dir → ``persist(MEMORY_AND_DISK)`` + a
   forcing count: keeps lineage (recompute on executor loss is slow but
   correct) rather than risking irrecoverable localCheckpoint blocks.
+
+`fixed_point` is the one driver for loops that iterate to convergence
+(graph CC, k-core, BFS, LPA, dedup connected components), and
+`message_edges` builds the edge table those loops send messages over.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -130,3 +136,95 @@ def spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)
     return df
+
+
+def sym_edges(eh: DataFrame) -> DataFrame:
+    """(src, dst) symmetric directed edges from a (u, v) undirected
+    edge table: each row exploded into both directions in ONE pass.
+    A unionByName of two projections of ``eh`` would, on an
+    UNMATERIALIZED eh, plan the whole edge-build subtree once per union
+    side."""
+    return eh.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
+                F.struct(F.col("v").alias("src"), F.col("u").alias("dst")),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst")
+
+
+def message_edges(eh: DataFrame, nodes: DataFrame) -> DataFrame:
+    """Materialized (src, dst, w) message table for a fixed-point loop:
+    w = 1 for both directions of every (u, v) edge of ``eh``, plus one
+    w = 0 SELF-LOOP per row of ``nodes`` (column ``node``).
+
+    The self-loop delivers a node's own state as a message, so a round
+    is one join + one aggregate over the messages alone, with no
+    join-back onto the state frame, and the state frame enters each
+    round's plan exactly once (plan depth stays linear in the block).
+    A union of the state rows into the aggregate computes the same
+    value but plants a Union inside the iterated plan, which trips
+    Spark 4.1.2's UnionBase.rewriteConstraints on some input shapes
+    (java.util.NoSuchElementException: key not found, reproduced in
+    tests/test_dedup.py's path-graph fixture). The one Union here sits
+    inside the materialize and executes exactly once. The w = 0 rows
+    are exactly the node set, so round 0 is a filter of this table."""
+    return materialize(
+        sym_edges(eh)
+        .select("src", "dst", F.lit(1).cast("long").alias("w"))
+        .unionByName(
+            nodes.select(
+                F.col("node").alias("src"),
+                F.col("node").alias("dst"),
+                F.lit(0).cast("long").alias("w"),
+            )
+        )
+    )
+
+
+def fixed_point(
+    state: DataFrame,
+    step: Callable[..., DataFrame],
+    *,
+    block: int,
+    max_rounds: int,
+) -> tuple[DataFrame, bool]:
+    """Iterate ``step`` from ``state`` for at most ``max_rounds`` rounds,
+    stopping early at a fixed point. Returns ``(iterate, converged)``.
+
+    Rounds are built lazily in blocks of ``block`` (the last block may
+    be shorter); ``step(df, first=..., last=...)`` builds one round and
+    learns where it sits in its block. The last round's frame must carry
+    a boolean ``_ch`` column, true on rows whose state that round (or,
+    for a caller that compares the whole block, that block) changed.
+    Per block the helper materializes the last round once, runs ONE
+    probe job (``filter(_ch).limit(1).count()``), unpersists the frame
+    it materialized for the previous block (on materialize's persist
+    fallback the loop would otherwise keep one cached copy per block;
+    ``state`` itself is the caller's and is never touched) and continues
+    from the new frame without ``_ch``. A block whose probe finds
+    nothing ends the loop: for a monotone update, a round that changed
+    nothing proves its input was already a fixed point, and rounds run
+    past a mid-block fixed point are no-ops, so the early-stopped
+    iterate equals the ``max_rounds`` unroll the oracles compute.
+
+    There is no cap policy here. ``converged`` is False when
+    ``max_rounds`` ran out with the last round still changing; the
+    iterate is then exactly the ``max_rounds``-round one, and each
+    caller decides whether to return it or fail."""
+    prev = None
+    done = 0
+    while done < max_rounds:
+        n = min(block, max_rounds - done)
+        for i in range(n):
+            state = step(state, first=i == 0, last=i == n - 1)
+        new = materialize(state)
+        changed = new.filter(F.col("_ch")).limit(1).count()
+        if prev is not None:
+            prev.unpersist()
+        prev, state = new, new.drop("_ch")
+        done += n
+        if changed == 0:
+            return state, True
+    return state, False

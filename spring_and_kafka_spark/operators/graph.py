@@ -1,10 +1,15 @@
-"""Graph analytics over relational data: integer-exact PageRank on the
-part co-purchase graph.
+"""Graph analytics over relational data on the part co-order graph:
+integer-exact PageRank, components, k-core, BFS, label propagation and
+the node-statistic family.
 
-The dedup family already covers the other canonical iterative graph op
-(connected components, llm/dedup.py); this module adds the ranked-
-importance side. Both follow the same iterative discipline: per-round
-`materialize` to cut lineage, driver holds only loop COUNTERS, never data.
+The loops that iterate to convergence (q_graph_cc, q_graph_kcore,
+q_graph_bfs, q_graph_lpa, and connected_components in llm/dedup.py) all
+run on exec_utils.fixed_point over an exec_utils.message_edges table:
+lazy blocks of rounds, one materialize and one 1-row probe per block,
+the driver holding only the probe result, never data. When a graph
+query hits its round cap it warns and returns the capped iterate, which
+its oracle's fixed unroll computes too. PageRank runs a FIXED number of
+rounds and stays one lazy unroll.
 
 Why integer arithmetic: a float PageRank can never hash-match across
 engines — per-node sums run in engine-specific order and float addition
@@ -21,11 +26,18 @@ driver's frozen 50-slot verification window prefix.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from spring_and_kafka_spark.exec_utils import materialize
+from spring_and_kafka_spark.exec_utils import (
+    fixed_point,
+    materialize,
+    message_edges,
+    sym_edges,
+)
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -335,73 +347,38 @@ def q_graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_CC_ROUNDS} rounds, both engines would return the same
     {_CC_ROUNDS}-round partial labeling (parity still holds; the
     output is then "components within {_CC_ROUNDS} hops of their min
-    id" — a documented cap, not an assertion). {_CC_ROUNDS} ≥ the
-    min-id node's eccentricity on every fixture (max measured: 10 at
-    sf0.01), so on shipped data the cap never binds.
+    id" — a documented cap with a RuntimeWarning, not an error).
+    {_CC_ROUNDS} ≥ the min-id node's eccentricity on every fixture (max
+    measured: 10 at sf0.01), so on shipped data the cap never binds.
 
     Shape at 100 TB: per-round cost is one edges⋈labels shuffle on the
-    node key plus a map-side-combined min-groupBy — the sparse-edge
-    iterative discipline of llm/dedup.py (labels materialized per
-    round to cut lineage, the driver holds only the loop counter and a
-    1-row changed count; synchronized propagation needs diameter
-    rounds, the documented trade vs pointer-jumping's denser
-    intermediate edge sets). Integer labels: min() is order-free and
-    exact, so the hash check is exact, not approximate.
+    node key plus a map-side-combined min-groupBy, driven by
+    exec_utils.fixed_point (labels materialized once per block to cut
+    lineage, the driver holds only a 1-row probe; synchronized
+    propagation needs diameter rounds, the documented trade vs
+    pointer-jumping's denser intermediate edge sets). Integer labels:
+    min() is order-free and exact, so the hash check is exact, not
+    approximate.
 
     Reference parity anchor: the reference app has no graph surface at
     all (src/main/java/jc/DemoApplication.java is a Kafka pipe);
     this extends the engine's beyond-the-reference analytics family.
     """
-    # r17 change 8 (guide §2.4, self-loop message form): each round used
-    # to LEFT-JOIN the aggregated neighbor-min back onto the label table
-    # — least(own, coalesce(min, own)). The same value is min() over the
-    # messages alone once the edge table carries one SELF-LOOP per node
-    # (built ONCE, outside the loop): the self-loop delivers the node's
-    # own label as a message, so a round is one join + one map-side-
-    # combinable aggregate — no join-back, and the label frame enters
-    # each round's plan exactly once (the old form referenced it twice,
-    # doubling the lazy subtree per unrolled round). Per-round labels
-    # are bit-identical (exact BIGINT min is order-free; a node with no
-    # neighbor message keeps its self-delivered label — exactly the
-    # oracle's coalesce), so the unroll ≡ the oracle's 16 chained CTEs.
-    # A plain union of label rows into the aggregate computes the same
-    # value but plants a Union inside the iterated plan, which trips
-    # Spark 4.1.2's UnionBase.rewriteConstraints on some input shapes
-    # (java.util.NoSuchElementException: key not found — reproduced in
-    # tests/test_dedup.py's path-graph fixture); the self-loop rows
-    # keep every iterated plan Union-free. The one Union here is inside
-    # the materialize and executes exactly once.
-    und = materialize(_co_order_und(spark, sf_dir))
-    sym = _sym_edges(und)
-    edges = materialize(
-        sym.select("src", "dst", F.lit(1).cast("long").alias("w"))
-        .unionByName(
-            sym.select("src")
-            .distinct()
-            .select(
-                "src", F.col("src").alias("dst"), F.lit(0).cast("long").alias("w")
-            )
-        )
-    )
-    # r0 falls out of the checkpointed edge table for free: the w = 0
-    # rows are exactly one row per node
+    edges = _co_order_messages(materialize(_co_order_und(spark, sf_dir)))
     labels = edges.filter(F.col("w") == 0).select(
         F.col("src").alias("node"), F.col("src").alias("lab")
     )
 
-    def propagate(lab_df: DataFrame, with_flag: bool = False) -> DataFrame:
+    def propagate(lab_df: DataFrame, first: bool, last: bool) -> DataFrame:
         j = edges.join(lab_df, edges.src == lab_df.node)
-        if not with_flag:
+        if not last:
             return j.groupBy(F.col("dst").alias("node")).agg(
                 F.min("lab").alias("lab")
             )
-        # final round of a block: the self-loop message (w = 0) IS the
-        # pre-round label, so the change flag needs no join against the
-        # block input — and, because labels are monotone non-increasing,
-        # "the LAST round changed nothing" already proves its input was
-        # a fixed point, stopping one whole block earlier than the old
-        # block-input comparison whenever the fixed point lands inside
-        # a block (sf0.1 converges at round 7: 2 blocks, was 3).
+        # the self-loop message (w = 0) IS the pre-round label, so the
+        # change flag needs no join against the block input; labels are
+        # monotone non-increasing, so "the LAST round changed nothing"
+        # proves its input was a fixed point
         return (
             j.groupBy(F.col("dst").alias("node"))
             .agg(
@@ -413,29 +390,16 @@ def q_graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    # EIGHT propagation rounds per materialize + convergence check
-    # (2 x 8 = the oracle's 16-round cap exactly). The r12/r17 block
-    # tuning history: the OLD two-reference propagate doubled its lazy
-    # subtree per round, so 8-round blocks exploded optimizer time
-    # (10-14 s) and 4 was the sweet spot; the self-loop form references
-    # the label frame once per round — plan depth is LINEAR in the
-    # block — and the re-run A/B (sf0.1, warm, 3 reps) moved the
-    # optimum: block-8 med 3.54 s vs block-4 med 4.03 s vs block-16
-    # med 4.94 s (one 16-round block overshoots the ~round-7 fixed
-    # point by 8 wasted lazy rounds before the flag can stop it).
-    # Over-stepping a mid-block fixed point stays free: converged
-    # labels are a fixed point, so extra propagations inside the block
-    # are no-ops (same argument that makes early-stop ≡ the oracle
-    # unroll); the flag in the block's LAST round detects it.
-    for _ in range(_CC_ROUNDS // 8):
-        stepped = labels.select("node", "lab")
-        for _k in range(7):
-            stepped = propagate(stepped)
-        new = materialize(propagate(stepped, with_flag=True))
-        changed = new.filter(F.col("_ch")).limit(1).count()
-        labels = new.drop("_ch")
-        if changed == 0:
-            break
+    # EIGHT rounds per block (2 x 8 = the 16-round cap). The self-loop
+    # form keeps plan depth LINEAR in the block; measured at sf0.1, warm,
+    # 3 reps: block-8 med 3.54 s vs block-4 med 4.03 s vs block-16 med
+    # 4.94 s (one 16-round block overshoots the ~round-7 fixed point by
+    # 8 wasted lazy rounds before the flag can stop it).
+    labels, converged = fixed_point(
+        labels, propagate, block=8, max_rounds=_CC_ROUNDS
+    )
+    if not converged:
+        _warn_capped("q_graph_cc", _CC_ROUNDS)
     return labels.groupBy(F.col("lab").alias("component")).agg(
         F.count(F.lit(1)).alias("n_nodes")
     )
@@ -490,97 +454,70 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity by fixed point (the q_graph_cc trick verbatim): the oracle
     unrolls exactly {_KCORE_ROUNDS} peel rounds; Spark iterates the
     identical recurrence but may stop once the alive set stops
-    shrinking — the alive set is MONOTONE decreasing, so an unchanged
-    count across a block means every round in it was a no-op and all
-    later rounds are too; the reported deg is a pure function of the
-    alive set, so it is stable at the fixed point with it. If a
+    shrinking — the alive set is MONOTONE decreasing, so a round in
+    which nobody dies is a fixed point and all later rounds are no-ops;
+    the reported deg is a pure function of the alive set, so it is
+    stable at the fixed point with it. If a
     pathological graph needed more than {_KCORE_ROUNDS} rounds, both
     engines return the same round-{_KCORE_ROUNDS} partial peel (a
-    documented cap, not an assertion); on shipped fixtures the deepest
-    measured peel is 6 rounds.
+    documented cap with a RuntimeWarning, not an assertion); on shipped
+    fixtures the deepest measured peel is 6 rounds.
 
-    Shape at 100 TB: per-round cost is two semi-join-shaped hash joins
+    Shape at 100 TB: per-round cost is one semi-join-shaped hash join
     of the edge table against the (small, shrinking) alive set plus one
     map-side-combined count — edges are materialized ONCE and never
-    rebuilt; the iterative discipline (lineage cut per block, driver
-    holds only a count) is the same as q_graph_cc. SIX peel rounds
-    run per materialize block (2 blocks at the {_KCORE_ROUNDS}-round
-    cap; the self-loop form keeps the lazy unroll's plan depth linear
-    in the block) — the alive table is small enough that job overhead,
-    not data, dominates a round, the same measurement that set
-    q_graph_cc's cadence.
+    rebuilt; the loop is exec_utils.fixed_point, as for q_graph_cc.
+    SIX peel rounds run per materialize block (2 blocks at the
+    {_KCORE_ROUNDS}-round cap; the self-loop form keeps the lazy
+    unroll's plan depth linear in the block) — the alive table is small
+    enough that job overhead, not data, dominates a round, the same
+    measurement that set q_graph_cc's cadence.
 
     Reference parity anchor: the reference app has no graph surface
     (src/main/java/jc/DemoApplication.java is a Kafka pipe); this
     extends the beyond-the-reference analytics family.
     """
-    # r17 change 8 (self-loop message form — see q_graph_cc for the
-    # Union-avoidance argument): the old peel joined the edge table
-    # against the alive set TWICE (once per endpoint). With one w = 0
-    # self-loop per node in the edge table, the same degree falls out of
-    # ONE semi-shaped join: every edge whose src is alive sends its
-    # weight to its dst, sum(w) counts exactly the alive real neighbors
-    # (the self-loop adds 0), and min(w) = 0 marks the nodes whose OWN
-    # self-loop fired — i.e. alive membership — so dead dst rows drop on
-    # that filter without a second join. On the symmetric edge table,
-    # # in-neighbors alive == # out-neighbors alive, so deg is
-    # bit-identical to the oracle's two-join count; an alive node with
-    # zero alive neighbors keeps its self-loop row and peels on
-    # deg = 0 < K, exactly as it vanished from the old groupBy. The
-    # flag round reports would-be deaths instead of filtering them, so
-    # convergence is read per ROUND, not per block — "nobody died in
-    # the block's last round" proves the alive set was already a fixed
-    # point (monotone decreasing), one block earlier than the old
-    # whole-block count comparison when the fixed point lands mid-block
-    # (sf0.1 peels dry at round 6: 2 blocks, was 3) — and the per-block
-    # full count() job disappears with it.
-    und = materialize(_co_order_und(spark, sf_dir))
-    sym = _sym_edges(und)
-    edges = materialize(
-        sym.select("src", "dst", F.lit(1).cast("long").alias("w"))
-        .unionByName(
-            sym.select("src")
-            .distinct()
-            .select(
-                "src", F.col("src").alias("dst"), F.lit(0).cast("long").alias("w")
-            )
-        )
-    )
+    # Self-loop message form (exec_utils.message_edges): every edge whose
+    # src is alive sends its weight to its dst, so sum(w) counts exactly
+    # the alive real neighbors (the self-loop adds 0), and min(w) = 0
+    # marks the nodes whose OWN self-loop fired, i.e. alive membership,
+    # so dead dst rows drop on that filter without a second join. On the
+    # symmetric edge table # in-neighbors alive == # out-neighbors alive,
+    # so deg is bit-identical to the oracle's two-join count; an alive
+    # node with zero alive neighbors keeps its self-loop row and peels
+    # on deg = 0 < K. A round's output still holds its dying rows
+    # (deg < K): the next round, and the return, filter them out, so the
+    # flag round can report deaths as _ch. The alive set is monotone
+    # decreasing, so "nobody died in the block's last round" proves it
+    # was already a fixed point. Round 0 seeds deg = K: everyone lives.
+    edges = _co_order_messages(materialize(_co_order_und(spark, sf_dir)))
     alive = edges.filter(F.col("w") == 0).select(
-        F.col("src").alias("node"), F.lit(0).cast("long").alias("deg")
+        F.col("src").alias("node"), F.lit(_KCORE_K).cast("long").alias("deg")
     )
 
-    def peel(alive_df: DataFrame, with_flag: bool = False) -> DataFrame:
+    def peel(alive_df: DataFrame, first: bool, last: bool) -> DataFrame:
+        alive_df = alive_df.filter(F.col("deg") >= _KCORE_K)
         g = (
             edges.join(alive_df, edges.src == alive_df.node)
-            .groupBy(F.col("dst").alias("gnode"))
-            .agg(F.sum("w").alias("deg"), F.min("w").alias("_mw"))
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum("w").cast("long").alias("deg"), F.min("w").alias("_mw"))
             .filter(F.col("_mw") == 0)
         )
-        if with_flag:
-            return g.select(
-                F.col("gnode").alias("node"),
-                F.col("deg").cast("long").alias("deg"),
-                (F.col("deg") < _KCORE_K).alias("_die"),
-            )
-        return g.filter(F.col("deg") >= _KCORE_K).select(
-            F.col("gnode").alias("node"), F.col("deg").cast("long").alias("deg")
-        )
+        if not last:
+            return g.select("node", "deg")
+        return g.select("node", "deg", (F.col("deg") < _KCORE_K).alias("_ch"))
 
-    # SIX peel rounds per materialize block (2 x 6 = the 12-round cap;
-    # the q_graph_cc block-retuning argument — linear plan depth under
-    # the self-loop form — re-measured here: block-6 med 3.10 s vs
-    # block-4 med 3.46 s vs one 12-round block med 3.62 s at sf0.1)
-    for _ in range(_KCORE_ROUNDS // 6):
-        stepped = alive
-        for _k in range(5):
-            stepped = peel(stepped)
-        new = materialize(peel(stepped, with_flag=True))
-        changed = new.filter(F.col("_die")).limit(1).count()
-        alive = new.filter(~F.col("_die")).drop("_die")
-        if changed == 0:
-            break
-    return alive.select("node", F.col("deg").cast("long").alias("core_deg"))
+    # SIX peel rounds per block (2 x 6 = the 12-round cap); measured at
+    # sf0.1: block-6 med 3.10 s vs block-4 med 3.46 s vs one 12-round
+    # block med 3.62 s
+    alive, converged = fixed_point(
+        alive, peel, block=6, max_rounds=_KCORE_ROUNDS
+    )
+    if not converged:
+        _warn_capped("q_graph_kcore", _KCORE_ROUNDS)
+    return alive.filter(F.col("deg") >= _KCORE_K).select(
+        "node", F.col("deg").alias("core_deg")
+    )
 
 
 _JACCARD_CENTER_CAP = 256  # wedge hub guard (see q_graph_jaccard)
@@ -690,7 +627,7 @@ def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # alternative measured 2.34/2.08. Outputs row-identical; oracle
     # hash parity at all three SFs.
     grp = materialize(
-        _sym_edges(eh)
+        sym_edges(eh)
         .groupBy("src")
         .agg(F.array_sort(F.collect_set("dst")).alias("ds"))
     )
@@ -803,43 +740,30 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     faithful ∞.
 
     Shape at 100 TB: per-round cost is one edges⋈frontier shuffle plus
-    a map-side-combined min-groupBy — the sparse iterative discipline
-    shared with CC (SIX relaxation rounds per materialize block, 2
-    blocks at the cap; lineage cut per block; the driver holds only a
-    changed count). Synchronized relaxation needs eccentricity rounds —
-    the documented trade vs pointer-doubling's denser intermediates."""
-    # r17 change 8 (self-loop message form — see q_graph_cc for the full
-    # argument, including why a Union inside the iterated plan is
-    # avoided): the edge table carries one w = 0 self-loop per node and
-    # w = 1 real edges, so a relaxation round is min(dist + w) over the
-    # join messages alone — the self-loop delivers the node's own
-    # distance unchanged, reproducing least(dist, md) bit for bit. NULL
-    # is still a faithful ∞: NULL + w = NULL, min() skips NULLs in both
-    # engines, and an all-NULL group stays NULL. The flag round recovers
-    # the pre-round distance from the w = 0 message (null-safe
-    # inequality), stopping one block earlier when the fixed point
-    # lands mid-block.
-    und = materialize(_co_order_und(spark, sf_dir))
-    sym = _sym_edges(und)
-    edges = materialize(
-        sym.select("src", "dst", F.lit(1).cast("long").alias("w"))
-        .unionByName(
-            sym.select("src")
-            .distinct()
-            .select(
-                "src", F.col("src").alias("dst"), F.lit(0).cast("long").alias("w")
-            )
-        )
-    )
+    a map-side-combined min-groupBy, driven by exec_utils.fixed_point
+    like CC (SIX relaxation rounds per materialize block, 2 blocks at
+    the cap; lineage cut per block; the driver holds only a 1-row
+    probe). A capped run warns and returns the round-{_BFS_ROUNDS}
+    distances, which the oracle computes too. Synchronized relaxation
+    needs eccentricity rounds — the documented trade vs
+    pointer-doubling's denser intermediates."""
+    # Self-loop message form (exec_utils.message_edges): a relaxation
+    # round is min(dist + w) over the join messages alone — the w = 0
+    # self-loop delivers the node's own distance unchanged, reproducing
+    # least(dist, md) bit for bit. NULL is still a faithful ∞: NULL + w =
+    # NULL, min() skips NULLs in both engines, and an all-NULL group
+    # stays NULL. The flag round recovers the pre-round distance from
+    # the w = 0 message (null-safe inequality).
+    edges = _co_order_messages(materialize(_co_order_und(spark, sf_dir)))
     dist = edges.filter(F.col("w") == 0).select(
         F.col("src").alias("node"),
         F.when(F.col("src") < _BFS_ANCHOR, F.lit(0)).cast("long").alias("dist"),
     )
 
-    def relax(dist_df: DataFrame, with_flag: bool = False) -> DataFrame:
+    def relax(dist_df: DataFrame, first: bool, last: bool) -> DataFrame:
         j = edges.join(dist_df, edges.src == dist_df.node)
         nd = (F.col("dist") + F.col("w")).cast("long")
-        if not with_flag:
+        if not last:
             return j.groupBy(F.col("dst").alias("node")).agg(
                 F.min(nd).cast("long").alias("dist")
             )
@@ -856,19 +780,12 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    # SIX relaxation rounds per materialize block (2 x 6 = the 12-round
-    # cap; the q_graph_cc block-retuning argument — linear plan depth
-    # under the self-loop form — re-measured here: block-6 med 3.00 s
-    # vs block-4 med 3.64 s vs one 12-round block med 3.87 s at sf0.1)
-    for _ in range(_BFS_ROUNDS // 6):
-        stepped = dist.select("node", "dist")
-        for _k in range(5):
-            stepped = relax(stepped)
-        new = materialize(relax(stepped, with_flag=True))
-        changed = new.filter(F.col("_ch")).limit(1).count()
-        dist = new.drop("_ch")
-        if changed == 0:
-            break
+    # SIX relaxation rounds per block (2 x 6 = the 12-round cap);
+    # measured at sf0.1: block-6 med 3.00 s vs block-4 med 3.64 s vs one
+    # 12-round block med 3.87 s
+    dist, converged = fixed_point(dist, relax, block=6, max_rounds=_BFS_ROUNDS)
+    if not converged:
+        _warn_capped("q_graph_bfs", _BFS_ROUNDS)
     return dist.groupBy("dist").agg(F.count(F.lit(1)).alias("n_nodes"))
 
 
@@ -944,21 +861,23 @@ def _co_order_und(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sym_edges(eh: DataFrame) -> DataFrame:
-    """(src, dst) symmetric directed edges from a (u, v) undirected
-    edge table: each row exploded into both directions in ONE pass.
-    Replaces the unionByName of two projections of ``eh``, which — on
-    an UNMATERIALIZED eh — plans the whole edge-build subtree twice
-    (the r17 plan audit caught q_graph_cc/bfs/kcore/degree computing
-    the co-order build once per union side inside one job)."""
-    return eh.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
-                F.struct(F.col("v").alias("src"), F.col("u").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
+def _co_order_messages(und: DataFrame) -> DataFrame:
+    """exec_utils.message_edges over a materialized (u, v) edge table,
+    with one self-loop per edge endpoint: the message table of the
+    fixed-point graph queries."""
+    nodes = und.select(F.explode(F.array("u", "v")).alias("node")).distinct()
+    return message_edges(und, nodes)
+
+
+def _warn_capped(query: str, rounds: int) -> None:
+    """Say that a fixed-point query returned its capped iterate. The
+    result is still the oracle's: both engines unroll the same rounds."""
+    warnings.warn(
+        f"{query} did not converge within its {rounds}-round cap; "
+        f"returning the round-{rounds} iterate",
+        RuntimeWarning,
+        stacklevel=3,
+    )
 
 
 @register(
@@ -1419,7 +1338,7 @@ def modularity_readout(und: DataFrame, nb: DataFrame) -> DataFrame:
 _LPA_ROUNDS = 10  # ≥ measured fixpoint on every fixture (self-vote LPA:
 # 5 @ sf0.001, 7 @ sf0.01, 5 @ sf0.1; NULL injection only removes edges,
 # and the cap-parity argument below holds at ANY depth anyway)
-# The Spark loop runs _LPA_ROUNDS // 2 two-round blocks and the
+# The Spark loop runs two-round blocks and the
 # early-stop check compares labels ACROSS a block (round k vs k-2), so
 # both the round-count parity with the oracle's unroll AND the
 # period-2-oscillation argument require an even cap (ADVICE r16).
@@ -1523,12 +1442,10 @@ def q_graph_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape at 100 TB: per round, one edges⋈labels shuffle + map-side
     combined (node, lab) count + a map-side-combinable max_by argmax
-    per node (r17: replaced the row_number window — one exchange +
-    per-partition SORT per round — with the second aggregation; both
-    aggs key on the node, so AQE reuses one partitioning);
-    labels materialized every 2 rounds to cut lineage (the q_graph_cc
-    4-per-block lesson, halved because each LPA round is two stages
-    deeper). The modularity tail is the extracted modularity_readout —
+    per node (both aggs key on the node, so AQE reuses one
+    partitioning); exec_utils.fixed_point materializes the labels every
+    2 rounds to cut lineage (a shorter block than q_graph_cc's because
+    each LPA round is two stages deeper). The modularity tail is the extracted modularity_readout —
     dimension-sized joins, |communities| output rows.
 
     Hot-node bound (r16 verdict watch item, adjudicated r17): a hub
@@ -1554,58 +1471,40 @@ def q_graph_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/main/java/jc/DemoApplication.java is a Kafka pipe) — part of
     the beyond-the-reference analytics family."""
     und = materialize(_co_order_und(spark, sf_dir))
-    # r17 change 8 (self-loop message form — see q_graph_cc for the
-    # Union-avoidance argument): the checkpointed edge table carries one
-    # w = 0 self-loop per node next to the real edges, so the SELF-VOTE
-    # arrives through the same join as the neighbor votes and the
-    # per-round unionByName of the label table into the vote stream is
-    # gone — a round is one join + the two vote aggregations, with the
-    # label frame entering the plan exactly once.
-    sym = _sym_edges(und)
-    edges = materialize(
-        sym.select("src", "dst", F.lit(1).cast("long").alias("w"))
-        .unionByName(
-            sym.select("src")
-            .distinct()
-            .select(
-                "src", F.col("src").alias("dst"), F.lit(0).cast("long").alias("w")
-            )
-        )
-    )
-    # r0 falls out of the checkpointed edge table for free (w = 0 rows)
+    # Self-loop message form (exec_utils.message_edges): the SELF-VOTE
+    # arrives through the same join as the neighbor votes, so a round is
+    # one join + the two vote aggregations, with the label frame
+    # entering the plan exactly once.
+    edges = _co_order_messages(und)
     labels = edges.filter(F.col("w") == 0).select(
         F.col("src").alias("node"), F.col("src").alias("lab")
     )
 
-    def propagate(lab_df: DataFrame) -> DataFrame:
-        # lab_df: (node, lab, lab0) — lab0 is the BLOCK-input label,
-        # threaded through the rounds for the convergence flag; it
-        # rides only on the self-loop (w = 0) vote row and max() pulls
-        # it back out of both aggregations (every other vote row
-        # contributes NULL), so the across-block comparison costs one
-        # nullable column on the vote exchange instead of a per-block
-        # join of the label table against the block input — locally a
-        # wash-to-slight-win (pooled 7-pair A/B med 5.17 vs 5.27 s),
-        # structurally the removal of an O(|V|)⋈O(|V|) join per block.
+    def propagate(lab_df: DataFrame, first: bool, last: bool) -> DataFrame:
+        # lab0 is the BLOCK-input label, added on the block's first
+        # round and threaded through for the convergence flag; it rides
+        # only on the self-loop (w = 0) vote row and max() pulls it back
+        # out of both aggregations (every other vote row contributes
+        # NULL), so the across-block comparison costs one nullable
+        # column on the vote exchange instead of a per-block join of the
+        # label table against the block input (pooled 7-pair A/B med
+        # 5.17 vs 5.27 s; structurally one O(|V|)⋈O(|V|) join less).
+        if first:
+            lab_df = lab_df.select("node", "lab", F.col("lab").alias("lab0"))
         votes = edges.join(lab_df, edges.src == lab_df.node).select(
             F.col("dst").alias("vnode"),
             "lab",
             F.when(F.col("w") == 0, F.col("lab0")).alias("_l0"),
         )
-        # r17: the per-node argmax is a max_by over the counted votes —
-        # max (c, -lab) == (count DESC, label ASC), the identical total
-        # order the previous row_number window ranked by — so the
-        # second aggregation replaces the window's exchange + SORT with
-        # a map-side-combinable agg (interleaved A/B at sf0.1: 2.7-2.9 s
-        # vs 3.0-3.9 s warm full-query). r17 change 8: the join-back of
-        # the argmax onto the label table is gone — the self-vote puts
-        # every lab_df node into votes (each node's self-loop delivers
-        # exactly one own-label vote), so the argmax's group set IS the
+        # The per-node argmax is a max_by over the counted votes: max
+        # (c, -lab) == (count DESC, label ASC), the oracle's row_number
+        # order, as a map-side-combinable agg instead of a window's
+        # exchange + SORT (interleaved A/B at sf0.1: 2.7-2.9 s vs
+        # 3.0-3.9 s warm full-query). Each node's self-loop delivers
+        # exactly one own-label vote, so the argmax's group set IS the
         # node set and its result is total (the oracle's
-        # coalesce(m.nlab, r.lab) provably never fires: m covers every
-        # node); returning the argmax directly removes one join per
-        # round with bit-identical labels.
-        return (
+        # coalesce(m.nlab, r.lab) never fires): no join-back needed.
+        out = (
             votes.groupBy("vnode", "lab")
             .agg(F.count(F.lit(1)).alias("c"), F.max("_l0").alias("_l0"))
             .groupBy("vnode")
@@ -1615,28 +1514,23 @@ def q_graph_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select(F.col("vnode").alias("node"), "lab", "lab0")
         )
-
-    # TWO propagation rounds per materialize + convergence check (the
-    # q_graph_cc block pattern at half stride: an LPA round adds a
-    # second aggregation on top of CC's join+agg, so the lazy unroll is
-    # deeper per round — and unlike the monotone families the flag MUST
-    # compare across the whole block: round k vs k-2 at even spans is
-    # what makes early stop agree with the even-round oracle unroll
-    # under period-2 oscillation). The block-input label arrives
-    # through the threaded lab0 column (see propagate).
-    for _ in range(_LPA_ROUNDS // 2):
-        stepped = labels.select("node", "lab", F.col("lab").alias("lab0"))
-        for _k in range(2):
-            stepped = propagate(stepped)
-        new = materialize(
-            stepped.select(
-                "node", "lab", (F.col("lab") != F.col("lab0")).alias("_ch")
-            )
+        if not last:
+            return out
+        return out.select(
+            "node", "lab", (F.col("lab") != F.col("lab0")).alias("_ch")
         )
-        changed = new.filter(F.col("_ch")).limit(1).count()
-        labels = new.drop("_ch")
-        if changed == 0:
-            break
+
+    # TWO rounds per block (CC's block pattern at a shorter stride: an
+    # LPA round adds a second aggregation, so the lazy unroll is deeper
+    # per round). Unlike the monotone families the flag MUST compare
+    # across the whole block: round k vs k-2 at even spans is what makes
+    # early stop agree with the even-round oracle unroll under period-2
+    # oscillation.
+    labels, converged = fixed_point(
+        labels, propagate, block=2, max_rounds=_LPA_ROUNDS
+    )
+    if not converged:
+        _warn_capped("q_graph_lpa", _LPA_ROUNDS)
     deg = co_order_degrees(und)
     nb = materialize(
         deg.join(labels.select("node", F.col("lab").alias("com")), "node")

@@ -1,8 +1,10 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (single JVM); the
-settings below are chosen so the same logical plans scale to a real
-multi-executor cluster:
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (single JVM); when
+the variable is unset the core count is the host's, i.e. the CPUs this
+process may run on (``os.sched_getaffinity``), so the session never
+oversubscribes the machine. The settings below are chosen so the same
+logical plans scale to a real multi-executor cluster:
 
 - AQE on (dynamic coalescing, skew-join splitting, runtime join strategy)
 - shuffle partitions sized to the local core count rather than the 200
@@ -33,7 +35,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(
+            os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+        )
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     spark = (

@@ -1282,3 +1282,65 @@ def test_rerank_heap_boundary_ulp_ties_agree_across_engines(spark, tmp_path):
     )
     by_probe = dict(zip(got_probe["nprobe"], got_probe["recall"]))
     assert by_probe[16] == 1.0  # full-scan anchor row holds
+
+
+def _path_orders(parts):
+    """Every consecutive pair of ``parts`` co-ordered twice (so the path
+    survives the >= 2 thinning): the path graph parts[0]-...-parts[-1]."""
+    pairs = zip(parts, parts[1:])
+    return [(2 * i + r, [a, b]) for i, (a, b) in enumerate(pairs) for r in (1, 2)]
+
+
+def test_graph_cc_path_deeper_than_cap_warns_and_matches(spark, tmp_path):
+    """A 21-node path needs 20 rounds, more than the 16-round cap: both
+    engines return the round-16 labels (nodes within 16 hops of 10 carry
+    10, each farther node its own id minus 16), and Spark says so."""
+    d = _write_lineitem_pairs(
+        spark, tmp_path, "cc-deep", _path_orders(list(range(10, 31)))
+    )
+    with pytest.warns(RuntimeWarning, match="q_graph_cc.*16-round cap"):
+        got = assert_parity(spark, "q_graph_cc", d, ["lineitem"])
+    comp = dict(zip(got["component"], got["n_nodes"]))
+    assert comp == {10: 17, 11: 1, 12: 1, 13: 1, 14: 1}
+
+
+def test_graph_kcore_path_deeper_than_cap_warns_and_matches(spark, tmp_path):
+    """A 30-node path peels one node off each end per round, so it takes
+    15 rounds to empty: at the 12-round cap both engines hold the middle
+    six nodes, and Spark says it stopped at the cap."""
+    d = _write_lineitem_pairs(
+        spark, tmp_path, "kcore-deep", _path_orders(list(range(10, 40)))
+    )
+    with pytest.warns(RuntimeWarning, match="q_graph_kcore.*12-round cap"):
+        got = assert_parity(spark, "q_graph_kcore", d, ["lineitem"])
+    core = dict(zip(got["node"], got["core_deg"]))
+    assert core == {n: 2 for n in range(22, 28)}
+
+
+def test_graph_bfs_path_deeper_than_cap_warns_and_matches(spark, tmp_path):
+    """Anchor 50 at the head of a 16-hop path 50-100-...-115: at the
+    12-round cap hops 1..12 are reached and the last four nodes are
+    still unreached (NULL) in both engines, and Spark says so."""
+    d = _write_lineitem_pairs(
+        spark, tmp_path, "bfs-deep", _path_orders([50] + list(range(100, 116)))
+    )
+    with pytest.warns(RuntimeWarning, match="q_graph_bfs.*12-round cap"):
+        got = assert_parity(spark, "q_graph_bfs", d, ["lineitem"])
+    hist = dict(zip(got["dist"], got["n_nodes"]))
+    assert hist == {**{k: 1 for k in range(13)}, None: 4}
+
+
+def test_graph_lpa_capped_run_warns(spark, tmp_path, monkeypatch):
+    """On a path, self-vote LPA spreads the smallest label one hop per
+    round, so 2 rounds cannot settle a 10-node path: the capped run
+    warns (Spark side only; the oracle froze the production cap at
+    registration)."""
+    from spring_and_kafka_spark.operators import graph as graph_mod
+
+    d = _write_lineitem_pairs(
+        spark, tmp_path, "lpa-deep", _path_orders(list(range(10, 20)))
+    )
+    monkeypatch.setattr(graph_mod, "_LPA_ROUNDS", 2)
+    with pytest.warns(RuntimeWarning, match="q_graph_lpa.*2-round cap"):
+        n = SPECS["q_graph_lpa"].fn(spark, d).count()
+    assert n >= 1

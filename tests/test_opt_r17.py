@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from spring_and_kafka_spark.exec_utils import materialize, spread
+from spring_and_kafka_spark.exec_utils import sym_edges as _sym_edges
 from spring_and_kafka_spark.llm.dedup import (
     _MINHASH_PERMS,
     _SHINGLE_DF_CAP,
@@ -22,7 +23,7 @@ from spring_and_kafka_spark.llm.dedup import (
     planted_corpus,
     shingles,
 )
-from spring_and_kafka_spark.operators.graph import _co_order_pairs, _sym_edges
+from spring_and_kafka_spark.operators.graph import _co_order_pairs
 from spring_and_kafka_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"

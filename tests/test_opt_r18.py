@@ -49,10 +49,10 @@ def test_graph_jaccard_grouped_wedges_match_self_join_reference(spark):
     # in-array u<v pairs). Pin the full query against the pre-r18
     # reference: deg groupBy + cap semi-join + wedge self-join.
     from spring_and_kafka_spark.exec_utils import materialize
+    from spring_and_kafka_spark.exec_utils import sym_edges as _sym_edges
     from spring_and_kafka_spark.operators.graph import (
         _JACCARD_CENTER_CAP,
         _co_order_und,
-        _sym_edges,
         q_graph_jaccard,
     )
 
