@@ -5,8 +5,9 @@ cross-SOURCE template table, this maintains the per-SEGMENT df state the
 threshold-calibration histogram (and any df-thresholded excision pass)
 reads.
 
-Two mergeable partial tables per micro-batch (DESIGN.md item 17 —
-counters merge by sum, distincts by presence-key union):
+Two mergeable partial tables per micro-batch, kept under the
+merge-on-read contract of DESIGN.md §17 (counters merge by sum,
+distincts by presence-key union):
 
 - ``inst``:     (seg, n) segment-instance sums — a batch of millions of
   docs lands as one row per touched segment, map-side combined;
@@ -14,9 +15,9 @@ counters merge by sum, distincts by presence-key union):
   (segment, doc) pairs per batch, never by instance volume. df is NOT a
   foldable counter (a doc re-seen in a later batch must count once), so
   the flag derives on read from the presence keys — the same
-  r15-review simplification the templates maintainer uses for its
-  distinct-source flag. At web scale this is the table to sketch (HLL);
-  kept exact so stream ≡ batch is bit-testable.
+  simplification the templates maintainer uses for its distinct-source
+  flag. At web scale this is the table to sketch (HLL); kept exact so
+  stream ≡ batch is bit-testable.
 
 Read-time ``maintained_seg_df_hist`` reproduces q_dedup_seg_df_hist's
 output EXACTLY (same segment builder — llm.text.boilerplate_segments —
@@ -25,11 +26,8 @@ floor-form share), asserted to bit-equality after a full replay in
 tests/test_streaming_advanced.py.
 
 Delivery contract: exactly-once per checkpointed document for the
-instance sums (replays overwrite their own ``batch_id=N`` partition);
-the presence-derived df additionally tolerates a re-delivered document
-by construction. Torn state (a crash between or during on_batch's two
-writes — including the missing-_SUCCESS case) RAISES at read time via
-streaming.sinks.read_partial_state.
+instance sums; the presence-derived df additionally tolerates a
+re-delivered document by construction.
 
 Reference parity anchor: no streaming-curation surface in the reference
 (src/main/java/jc/DemoApplication.java is a Kafka pipe) — part of the
@@ -45,13 +43,17 @@ from pyspark.sql import Window as W
 
 from spring_and_kafka_spark.llm.text import boilerplate_segments
 from spring_and_kafka_spark.streaming.sinks import (
-    foreach_batch_sink,
+    partial_state_stream,
     read_partial_state,
 )
 
-_INST_SCHEMA = "seg STRING, n BIGINT"
-_PRESENCE_SCHEMA = "seg STRING, doc_id BIGINT"
-_SUBTABLES = (("inst", _INST_SCHEMA), ("presence", _PRESENCE_SCHEMA))
+_TABLES = {
+    "inst": (
+        "seg STRING, n BIGINT",
+        lambda seg: seg.groupBy("seg").agg(F.count(F.lit(1)).alias("n")),
+    ),
+    "presence": ("seg STRING, doc_id BIGINT", lambda seg: seg.distinct()),
+}
 
 
 def seg_df_delta_stream(docs: DataFrame, state_dir: str):
@@ -59,32 +61,13 @@ def seg_df_delta_stream(docs: DataFrame, state_dir: str):
     ``state_dir`` (availableNow trigger — drains the staged corpus then
     stops, the replay harness convention). NULL doc_id rows are
     excluded exactly as the batch query's scan excludes them."""
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # one cut per batch, two consumers (the templates.py convention;
-        # try/finally so a failed write can't leak the cached batch)
-        seg = boilerplate_segments(
-            batch_df.filter(F.col("doc_id").isNotNull())
-        ).select("seg", "doc_id").persist()
-        try:
-            (
-                seg.groupBy("seg")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .write.mode("overwrite")
-                .parquet(f"{state_dir}/inst/batch_id={batch_id}")
-            )
-            (
-                seg.distinct()
-                .write.mode("overwrite")
-                .parquet(f"{state_dir}/presence/batch_id={batch_id}")
-            )
-        finally:
-            seg.unpersist()
-
-    return (
-        foreach_batch_sink(docs, on_batch, state_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
+    return partial_state_stream(
+        docs,
+        state_dir,
+        _TABLES,
+        prep=lambda b: boilerplate_segments(
+            b.filter(F.col("doc_id").isNotNull())
+        ).select("seg", "doc_id"),
     )
 
 
@@ -96,11 +79,9 @@ def maintained_seg_df_hist(spark: SparkSession, state_dir: str) -> DataFrame:
     templates.py batch_id-partition-column lesson: partitioned reads
     append batch_id even when the user schema omits it, and a distinct
     keyed on it would double-count a (seg, doc) pair re-seen in a later
-    batch); instance counts merge by sum. Torn state raises (module
-    docstring)."""
-    inst, presence = read_partial_state(
-        spark, state_dir, _SUBTABLES, "seg-df"
-    )
+    batch); instance counts merge by sum. Torn state raises
+    (read_partial_state)."""
+    inst, presence = read_partial_state(spark, state_dir, _TABLES, "seg-df")
     f = (
         presence.select("seg", "doc_id")
         .groupBy("seg")

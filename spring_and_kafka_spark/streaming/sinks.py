@@ -1,9 +1,18 @@
 """Streaming sinks (SURVEY.md §2.1/§2.8): the reference's terminal `log`
-sink and per-batch callback generalized.
+sink and per-batch callback generalized, plus the one writer and the one
+reader of merge-on-read maintainer state (DESIGN.md §17).
 
 Reference anchors: the consumer's terminal handle lambda logging each
 (topic, records) entry (reference: src/main/java/jc/DemoApplication.java:154-157)
 and the Spring XD `… | log` sink (reference: README.md:331,336).
+
+A maintainer's state is declared once as a table spec: a mapping
+``name -> (schema, build)``, where ``build(prepped_batch)`` returns that
+table's per-batch partial. The name ``None`` is the flat one-table
+layout (partials directly under the state dir); any other name nests
+its partials under ``{state_dir}/{name}``. :func:`partial_state_stream`
+writes the spec and :func:`read_partial_state` reads it back; no other
+module knows the layout.
 """
 
 from __future__ import annotations
@@ -49,6 +58,56 @@ def parquet_sink(stream_df: DataFrame, path: str, checkpoint_dir: str):
     )
 
 
+def _table_dir(state_dir: str, name: str | None) -> str:
+    return state_dir if name is None else f"{state_dir}/{name}"
+
+
+def partial_state_stream(
+    stream_df: DataFrame,
+    state_dir: str,
+    tables,
+    prep: Callable[[DataFrame], DataFrame] | None = None,
+):
+    """Run a merge-on-read maintainer over ``stream_df`` and return the
+    started availableNow query, checkpointed at ``state_dir + "_ckpt"``.
+
+    Each micro-batch applies ``prep`` (if any), builds every table of
+    the ``tables`` spec from the prepped frame and overwrites that
+    table's ``batch_id=N`` partition, so a replayed batch rewrites its
+    own partials instead of doubling them. With more than one table the
+    prepped frame feeds several writes, so it is persisted for them and
+    unpersisted in ``finally`` (a failed write cannot leak it)."""
+    shared = len(tables) > 1
+
+    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
+        df = prep(batch_df) if prep else batch_df
+        if shared:
+            df.persist()
+        try:
+            for name, (_, build) in tables.items():
+                build(df).write.mode("overwrite").parquet(
+                    f"{_table_dir(state_dir, name)}/batch_id={batch_id}"
+                )
+        finally:
+            if shared:
+                df.unpersist()
+
+    return (
+        foreach_batch_sink(stream_df, on_batch, state_dir + "_ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _markers_written(spark) -> bool:
+    """Whether writes in this session leave ``_SUCCESS`` markers:
+    Hadoop's ``mapreduce.fileoutputcommitter.marksuccessfuljobs``
+    (default true), read from the Hadoop conf the write path itself
+    builds (the SparkContext's conf overlaid with session confs)."""
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return conf.getBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", True)
+
+
 def _batch_partitions(spark, table_dir: str) -> tuple[set[str], set[str]]:
     """(committed, uncommitted) ``batch_id=N`` partition names under one
     state table dir, by driver-side Hadoop FS metadata listing (works on
@@ -71,152 +130,81 @@ def _batch_partitions(spark, table_dir: str) -> tuple[set[str], set[str]]:
     return done, torn
 
 
-def read_single_state(
-    spark,
-    state_dir: str,
-    schema: str,
-    what: str,
-    require_success: bool = True,
-):
-    """Single-table variant of :func:`read_partial_state` for
-    maintainers whose state is a flat ``{state_dir}/batch_id=N`` layout
-    (streaming/mv.py, sketch.py, drift.py — the migration the r15
-    guard's docstring named as the standing cleanup): the sibling-table
-    tear levels are vacuous with one table, so only the level-3 check
-    applies — a ``batch_id=N`` partition WITHOUT its ``_SUCCESS``
-    marker is a crash DURING that write (the dir exists from job
-    start, so the bare read absorbs partial data silently) and RAISES.
-    Returns an empty frame when the state dir doesn't exist (the
-    stream simply never ran).
+def read_partial_state(spark, state_dir: str, tables, what: str):
+    """Read the state a ``tables`` spec declares: one DataFrame per
+    table, in spec order (all empty when no table exists — the stream
+    simply never ran). Torn state RAISES instead of being silently
+    absorbed, at three levels:
 
-    ``require_success=False`` skips the marker check — for deployments
-    whose committer writes no markers
-    (``mapreduce.fileoutputcommitter.marksuccessfuljobs=false``, the
-    common object-store-committer setting — ADVICE r15): tear
-    detection then degrades to the replay-overwrite contract alone
-    (exactly the pre-guard behavior), but the degradation is chosen
-    EXPLICITLY by the caller instead of silently being the only mode.
-    The default assumes markers, which Spark's parquet batch writes
-    under ``foreachBatch`` produce out of the box."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        frame = spark.read.schema(schema).parquet(state_dir)
-    except AnalysisException:  # no batch ever committed a partition
-        return spark.createDataFrame([], schema)
-    _, torn = _batch_partitions(spark, state_dir)
-    if torn:
-        if require_success:
-            raise RuntimeError(
-                f"partial {what} state under {state_dir}: "
-                f"{sorted(torn)[0]} has no _SUCCESS marker — a crash "
-                "during that write; replay that batch or clear the "
-                "state dir"
-            )
-        # markerless-committer mode: a marker-less partition is expected,
-        # but it is also exactly what a mid-write crash leaves behind —
-        # log so operators can tell the two apart (ADVICE r16)
-        _LOG.warning(
-            "%s state under %s: merging %d marker-less batch "
-            "partition(s) (%s ...) under require_success=False — "
-            "expected for markerless committers, but indistinguishable "
-            "from a mid-write crash; tear detection degrades to the "
-            "replay-overwrite contract",
-            what,
-            state_dir,
-            len(torn),
-            sorted(torn)[0],
-        )
-    return frame
-
-
-def read_partial_state(
-    spark, state_dir: str, subtables, what: str, require_success: bool = True
-):
-    """Read a merge-on-read maintainer's partial state tables, RAISING
-    on torn state instead of silently absorbing it (the freshness.py
-    guard generalized to N sibling tables — ADVICE r6 / round-7 review:
-    independent silent reads of sibling state are the bug shape).
-
-    ``subtables`` is a list of (name, schema) pairs; returns a tuple of
-    DataFrames in the same order (all empty when NO table exists — the
-    stream simply never ran). Three tear levels are checked:
-
-    1. a top-level table dir missing while a sibling exists — a crash
-       between a batch's first and later writes on the FIRST batch;
+    1. a table dir missing while a sibling exists — a crash between a
+       batch's writes on the FIRST batch;
     2. a ``batch_id=N`` partition present under some tables only — the
        same crash on any later batch;
     3. a ``batch_id=N`` partition WITHOUT its ``_SUCCESS`` marker — a
-       crash DURING that write (the dir exists from job start, so bare
-       dir-presence checks pass while the data inside is partial; the
-       r15 review found this evasion in the first templates guard).
-       Skippable via ``require_success=False`` for committers that
-       write no markers (see :func:`read_single_state`); levels 1-2
-       still apply.
+       crash DURING that write (the dir exists from job start, so a
+       bare dir-presence check passes while the data inside is
+       partial).
 
-    All checks are driver-side Hadoop FS metadata listings (works on
-    object stores), never a Spark job. Single-table maintainers
-    (streaming/mv.py, sketch.py, drift.py) read the flat-layout twin
-    :func:`read_single_state` (the r15 standing cleanup, closed r16)."""
+    A one-table spec is the N=1 case: levels 1-2 are vacuous, level 3
+    still applies. Level 3 applies only when the session's committer
+    writes markers (:func:`_markers_written`); otherwise a marker-less
+    partition counts as a batch and is logged, since a mid-write crash
+    looks identical. All checks are driver-side Hadoop FS metadata
+    listings (works on object stores), never a Spark job."""
     from pyspark.errors import AnalysisException
 
-    def read_or_none(sub: str, schema: str) -> DataFrame | None:
+    def read_or_none(name: str | None, schema: str) -> DataFrame | None:
         try:
-            return spark.read.schema(schema).parquet(f"{state_dir}/{sub}")
+            return spark.read.schema(schema).parquet(_table_dir(state_dir, name))
         except AnalysisException:
             return None
 
-    frames = {sub: read_or_none(sub, sch) for sub, sch in subtables}
-    present = [sub for sub, df in frames.items() if df is not None]
-    if present and len(present) < len(subtables):
-        missing = [sub for sub, df in frames.items() if df is None]
+    frames = {name: read_or_none(name, sch) for name, (sch, _) in tables.items()}
+    present = [name for name, df in frames.items() if df is not None]
+    if not present:
+        return tuple(spark.createDataFrame([], sch) for sch, _ in tables.values())
+    if len(present) < len(tables):
+        missing = [name for name, df in frames.items() if df is None]
         raise RuntimeError(
             f"partial {what} state under {state_dir}: {present} exist "
             f"but {missing} are missing — a crash between on_batch's "
             "writes; replay the last batch or clear the state dir"
         )
-    if not present:
-        return tuple(
-            spark.createDataFrame([], sch) for _, sch in subtables
-        )
 
+    markers = _markers_written(spark)
     sets = {}
-    for sub, _ in subtables:
-        done, torn = _batch_partitions(spark, f"{state_dir}/{sub}")
-        if torn and require_success:
+    for name in tables:
+        done, torn = _batch_partitions(spark, _table_dir(state_dir, name))
+        if torn and markers:
+            where = "" if name is None else f" under {name}/"
             raise RuntimeError(
                 f"partial {what} state under {state_dir}: "
-                f"{sorted(torn)[0]} under {sub}/ has no _SUCCESS marker "
-                "— a crash during that write; replay that batch or "
-                "clear the state dir"
+                f"{sorted(torn)[0]}{where} has no _SUCCESS marker — a "
+                "crash during that write; replay that batch or clear "
+                "the state dir"
             )
-        # with markers disabled, a marker-less partition is simply a
-        # batch (the committer never wrote markers) — include it in the
-        # sibling-alignment check rather than treating it as torn, but
-        # log it: a mid-write crash looks identical (ADVICE r16)
-        if torn and not require_success:
+        if torn:
             _LOG.warning(
-                "%s state under %s/%s: merging %d marker-less batch "
-                "partition(s) (%s ...) under require_success=False — "
-                "expected for markerless committers, but "
-                "indistinguishable from a mid-write crash",
+                "%s state under %s: merging %d marker-less batch "
+                "partition(s) (%s ...) — expected when the committer "
+                "writes no _SUCCESS markers, but indistinguishable from "
+                "a mid-write crash",
                 what,
-                state_dir,
-                sub,
+                _table_dir(state_dir, name),
                 len(torn),
                 sorted(torn)[0],
             )
-        sets[sub] = done if require_success else (done | torn)
+        sets[name] = done | torn
     union = set().union(*sets.values())
-    for sub, _ in subtables:
-        missing = union - sets[sub]
+    for name in tables:
+        missing = union - sets[name]
         if missing:
             b = sorted(missing)[0]
             haves = [s for s, have in sets.items() if b in have]
             raise RuntimeError(
                 f"partial {what} state under {state_dir}: {b} has "
-                f"{'/, '.join(haves)}/ but not {sub}/ — a crash "
+                f"{'/, '.join(haves)}/ but not {name}/ — a crash "
                 "between on_batch's writes; replay that batch or clear "
                 "the state dir"
             )
-    return tuple(frames[sub] for sub, _ in subtables)
+    return tuple(frames.values())

@@ -5,7 +5,8 @@ boundary-ALIGNED segment-df state, this maintains the content-defined
 anchor table the offset-free aligner reads, so new documents can be
 aligned against the whole accumulated corpus without a batch rescan.
 
-Two mergeable partial tables per micro-batch (DESIGN.md item 17):
+Two mergeable partial tables per micro-batch, kept under the
+merge-on-read contract of DESIGN.md §17:
 
 - ``anchors``: (doc_id, hv, pos) — the mod-sampled sha2-prefix anchors
   at min position per (doc, hash) WITHIN the batch. min-pos is a
@@ -25,12 +26,8 @@ same df-capped candidate generation, same interval-union sweep,
 asserted to bit-equality after a full replay in
 tests/test_streaming_advanced.py.
 
-Delivery contract: exactly-once per checkpointed document (replays
-overwrite their own ``batch_id=N`` partition); cross-batch
+Delivery contract: exactly-once per checkpointed document; cross-batch
 re-delivery additionally tolerated by the min/distinct merges above.
-Torn state (a crash between or during on_batch's two writes —
-including the missing-_SUCCESS case) RAISES at read time via
-streaming.sinks.read_partial_state.
 
 Reference parity anchor: no streaming-curation surface in the reference
 (src/main/java/jc/DemoApplication.java is a Kafka pipe) — part of the
@@ -50,56 +47,36 @@ from spring_and_kafka_spark.llm.dedup import (
     _span_cover_readout,
 )
 from spring_and_kafka_spark.streaming.sinks import (
-    foreach_batch_sink,
+    partial_state_stream,
     read_partial_state,
 )
 
-_ANCHOR_SCHEMA = "doc_id BIGINT, hv BIGINT, pos BIGINT"
-_SIZES_SCHEMA = "doc_id BIGINT, n BIGINT"
-_SUBTABLES = (("anchors", _ANCHOR_SCHEMA), ("sizes", _SIZES_SCHEMA))
+_TABLES = {
+    "anchors": ("doc_id BIGINT, hv BIGINT, pos BIGINT", _span_anchor_table),
+    "sizes": (
+        "doc_id BIGINT, n BIGINT",
+        lambda dd: dd.select("doc_id", F.col("n").cast("long").alias("n")),
+    ),
+}
+
+
+def _doc_tokens(batch_df: DataFrame) -> DataFrame:
+    """(doc_id, ts, n) token rows of the scanned docs: NULL-doc_id /
+    NULL-text / empty-text rows dropped as the batch corpus filter
+    drops them."""
+    toks = F.split("text", " ")
+    return batch_df.filter(
+        F.col("doc_id").isNotNull()
+        & F.col("text").isNotNull()
+        & (F.col("text") != "")
+    ).select("doc_id", toks.alias("ts"), F.size(toks).alias("n"))
 
 
 def span_anchor_delta_stream(docs: DataFrame, state_dir: str):
     """Fold a document stream into per-batch anchor/size partials under
     ``state_dir`` (availableNow trigger — drains the staged corpus then
-    stops, the replay harness convention). NULL-doc_id / NULL-text /
-    empty-text rows are excluded exactly as the batch query's corpus
-    filter excludes them."""
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        toks = F.split("text", " ")
-        # one token-table cut per batch, two consumers (the segdf
-        # convention; try/finally so a failed write can't leak it)
-        dd = (
-            batch_df.filter(
-                F.col("doc_id").isNotNull()
-                & F.col("text").isNotNull()
-                & (F.col("text") != "")
-            )
-            .select(
-                "doc_id", toks.alias("ts"), F.size(toks).alias("n")
-            )
-            .persist()
-        )
-        try:
-            (
-                _span_anchor_table(dd)
-                .write.mode("overwrite")
-                .parquet(f"{state_dir}/anchors/batch_id={batch_id}")
-            )
-            (
-                dd.select("doc_id", F.col("n").cast("long").alias("n"))
-                .write.mode("overwrite")
-                .parquet(f"{state_dir}/sizes/batch_id={batch_id}")
-            )
-        finally:
-            dd.unpersist()
-
-    return (
-        foreach_batch_sink(docs, on_batch, state_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
+    stops, the replay harness convention)."""
+    return partial_state_stream(docs, state_dir, _TABLES, prep=_doc_tokens)
 
 
 def maintained_span_cover(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -109,11 +86,9 @@ def maintained_span_cover(spark: SparkSession, state_dir: str) -> DataFrame:
     The anchor partials re-min-merge per (doc, hv) (projected BEFORE
     the groupBy — the batch_id partition column must not key the
     merge), then the BATCH alignment tail and interval-union sweep run
-    unchanged over the merged table. Torn state raises (module
-    docstring)."""
-    anchors, sizes = read_partial_state(
-        spark, state_dir, _SUBTABLES, "span-anchor"
-    )
+    unchanged over the merged table. Torn state raises
+    (read_partial_state)."""
+    anchors, sizes = read_partial_state(spark, state_dir, _TABLES, "span-anchor")
     an = materialize(
         anchors.select("doc_id", "hv", "pos")
         .groupBy("doc_id", "hv")

@@ -1,17 +1,17 @@
 """Streaming template-table maintenance: the ingest-side twin of
 q_text_boilerplate. Documents arrive as a (replayed) stream; each
 micro-batch folds its tumbling segments into two MERGEABLE partial
-state tables (DESIGN.md item 17 — counters that merge by union, with
-the non-mergeable readout derived at read time):
+state tables, kept under the merge-on-read contract of DESIGN.md §17
+(counters that merge by union, with the non-mergeable readout derived
+at read time):
 
 - ``counts``: (source, seg, n) segment-instance sums — plainly
   mergeable (a batch of millions of docs lands as one row per touched
   (source, seg)), and its KEY SET doubles as the distinct
   (seg, source) presence table the cross-source template flag needs
   (a distinct count is not a foldable counter, so the flag derives on
-  read from the presence keys — an r15 review simplification: an
-  earlier draft wrote a separate ``pairs`` presence table whose rows
-  were exactly these keys);
+  read from the presence keys; a separate presence table would hold
+  exactly these keys);
 - ``docs``:   distinct (source, doc_id) presence for the n_docs
   readout. At 100 TB this table is the one worth sketching (HLL, the
   q_agg_hll_rollup primitive) — kept exact here so stream ≡ batch is
@@ -33,10 +33,6 @@ document, but the instance counts (n_segments, n_boiler) are sums and
 would double — an at-least-once upstream needs doc-keyed idempotent
 counts (presence × per-doc segment counts), not this maintainer.
 
-Torn state (a crash between or during on_batch's two writes) RAISES
-at read time via streaming.sinks.read_partial_state — including the
-missing-_SUCCESS case a bare directory check cannot see.
-
 Reference parity anchor: no streaming-curation surface in the
 reference (src/main/java/jc/DemoApplication.java is a Kafka pipe) —
 part of the beyond-the-reference LLM-data family, composed from the
@@ -54,46 +50,30 @@ from spring_and_kafka_spark.llm.text import (
     boilerplate_segments,
 )
 from spring_and_kafka_spark.streaming.sinks import (
-    foreach_batch_sink,
+    partial_state_stream,
     read_partial_state,
 )
 
-_COUNTS_SCHEMA = "source STRING, seg STRING, n BIGINT"
-_DOCS_SCHEMA = "source STRING, doc_id BIGINT"
-_SUBTABLES = (("counts", _COUNTS_SCHEMA), ("docs", _DOCS_SCHEMA))
+_TABLES = {
+    "counts": (
+        "source STRING, seg STRING, n BIGINT",
+        lambda seg: seg.groupBy("source", "seg").agg(
+            F.count(F.lit(1)).alias("n")
+        ),
+    ),
+    "docs": (
+        "source STRING, doc_id BIGINT",
+        lambda seg: seg.select("source", "doc_id").distinct(),
+    ),
+}
 
 
 def template_delta_stream(docs: DataFrame, state_dir: str):
     """Fold a document stream into per-batch template-state partials
     under ``state_dir`` (availableNow trigger — drains the staged
     corpus then stops, the replay harness convention)."""
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # one cut per batch: two consumers below (the q_dedup_minhash
-        # materialize lesson, applied per micro-batch); try/finally so a
-        # failed write cannot leak the cached batch across retries (the
-        # freshness.py on_batch convention)
-        seg = boilerplate_segments(batch_df).persist()
-        try:
-            (
-                seg.groupBy("source", "seg")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .write.mode("overwrite")
-                .parquet(f"{state_dir}/counts/batch_id={batch_id}")
-            )
-            (
-                seg.select("source", "doc_id")
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(f"{state_dir}/docs/batch_id={batch_id}")
-            )
-        finally:
-            seg.unpersist()
-
-    return (
-        foreach_batch_sink(docs, on_batch, state_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
+    return partial_state_stream(
+        docs, state_dir, _TABLES, prep=boilerplate_segments
     )
 
 
@@ -106,14 +86,12 @@ def maintained_templates(spark: SparkSession, state_dir: str) -> DataFrame:
     partitioned partials appends the batch_id partition column even
     when the user schema omits it, so a bare distinct() would key on
     batch_id and double-count a pair or document re-seen in a later
-    batch (r15 review finding). count_distinct itself then dedups —
+    batch. count_distinct itself then dedups —
     no extra pre-distinct shuffle — and, on doc_id, skips NULLs
     exactly as the batch twin's count_distinct does (untagged rows
     contribute segments but not to n_docs, in both). Instance counts
-    merge by sum. Torn state raises (see the module docstring)."""
-    counts, docs = read_partial_state(
-        spark, state_dir, _SUBTABLES, "template"
-    )
+    merge by sum. Torn state raises (read_partial_state)."""
+    counts, docs = read_partial_state(spark, state_dir, _TABLES, "template")
     flag = (
         counts.select("seg", "source")
         .groupBy("seg")

@@ -730,14 +730,15 @@ def test_maintained_templates_dedups_across_batches_and_raises_on_tear(
 def test_single_table_maintainers_raise_on_torn_batch(
     spark, tmp_path, caplog
 ):
-    """r15 standing cleanup closed: the three single-table maintainers
-    (mv, sketch, drift) read through read_single_state, so a batch_id
-    partition missing its _SUCCESS marker (a crash DURING that write)
-    RAISES at read time instead of silently merging partial state —
-    and require_success=False explicitly restores the marker-less
-    committer behavior (ADVICE r15), now logging a warning per merged
-    marker-less partition batch so operators can distinguish a
-    markerless committer from an actual mid-write crash (ADVICE r16)."""
+    """The three single-table maintainers (mv, sketch, drift) read their
+    flat layout through read_partial_state, so a batch_id partition
+    missing its _SUCCESS marker (a crash DURING that write) RAISES at
+    read time instead of silently merging partial state — and a session
+    whose committer writes no markers
+    (mapreduce.fileoutputcommitter.marksuccessfuljobs=false) reads the
+    marker-less state through, logging a warning per merged marker-less
+    partition so operators can distinguish a markerless committer from
+    an actual mid-write crash."""
     import logging
     import os
 
@@ -745,7 +746,7 @@ def test_single_table_maintainers_raise_on_torn_batch(
 
     from spring_and_kafka_spark.streaming.drift import maintained_counts
     from spring_and_kafka_spark.streaming.mv import maintained_view
-    from spring_and_kafka_spark.streaming.sinks import read_single_state
+    from spring_and_kafka_spark.streaming.sinks import read_partial_state
     from spring_and_kafka_spark.streaming.sketch import merged_quantiles
 
     base_mv = spark.createDataFrame(
@@ -784,19 +785,27 @@ def test_single_table_maintainers_raise_on_torn_batch(
         with pytest.raises(RuntimeError, match="no _SUCCESS marker"):
             read(state).collect()
         # marker-less committer mode: the SAME state reads through when
-        # the caller explicitly opts out of the marker check — with a
-        # logged warning naming the merged marker-less partition
-        with caplog.at_level(
-            logging.WARNING,
-            logger="spring_and_kafka_spark.streaming.sinks",
-        ):
-            caplog.clear()
-            assert (
-                read_single_state(
-                    spark, state, schema, name, require_success=False
-                ).count()
-                == len(rows)
-            )
+        # the session's committer writes no markers — with a logged
+        # warning naming the merged marker-less partition
+        key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+        hconf = spark._jsc.hadoopConfiguration()
+        prev = hconf.get(key)
+        hconf.set(key, "false")
+        try:
+            with caplog.at_level(
+                logging.WARNING,
+                logger="spring_and_kafka_spark.streaming.sinks",
+            ):
+                caplog.clear()
+                (flat,) = read_partial_state(
+                    spark, state, {None: (schema, None)}, name
+                )
+                assert flat.count() == len(rows)
+        finally:
+            if prev is None:
+                hconf.unset(key)
+            else:
+                hconf.set(key, prev)
         assert any(
             "marker-less" in r.getMessage()
             and "batch_id=0" in r.getMessage()
